@@ -10,9 +10,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 object Curate {
 
   /** S4 — partition-discovering parquet scan of a raw prefix (reference
-    * `data_processing.py:226-244`). Partition-column string typing is
-    * preserved on the write side by `writeCurated`'s readers using this
-    * helper with inference disabled per-session in `Lakehouse.session`.
+    * `data_processing.py:226-244`). `transaction_date` stays a string because
+    * `Lakehouse.configure` disables partition-column type inference.
     */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -83,27 +82,29 @@ object Curate {
   }
 
   /** R1 + K2 (reference `data_processing.py:187-196, 399-435`): validate
-    * partition columns exist (raises like `:416-419`), control output file
-    * count with `coalesce` (no shuffle — SURVEY §7.4.6; the reference's
-    * global repartition(1) barrier is its biggest scale bug, we keep the
-    * file-count *contract* without the single-partition *bottleneck* unless
-    * explicitly asked for 1), then static-overwrite partitioned write.
+    * partition columns (raises like `:416-419`), then a static full-prefix
+    * overwrite (≙ Dask `overwrite=True`, SURVEY §7.4.5).
+    *
+    * A partitioned write is hash-shuffled on its partition columns into
+    * `defaultParallelism` partitions, so each partition directory is written
+    * by exactly one task and holds one file — the reference's one file per
+    * date without its `repartition(1)` barrier (`:405, 413`). The count is
+    * explicit because AQE would coalesce a `repartition(cols)` into a few
+    * tasks. An unpartitioned write (the small dims) is one file.
     */
-  def writeCurated(df: DataFrame, path: String, partitionCols: Seq[String],
-      targetPartitions: Int = 1): Unit = {
+  def writeCurated(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
     val missing = partitionCols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"partition columns missing from dataframe: $missing")
-    val sized = if (targetPartitions > 0) df.coalesce(targetPartitions) else df
-    val writer = sized.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(path)
+    val writer =
+      if (partitionCols.isEmpty) df.coalesce(1).write
+      else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+        partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
+    writer.mode(SaveMode.Overwrite).parquet(path)
   }
 
   /** Raw→curated flows (reference `flows.py:52-82, 220-249, 251-280`). */
-  def curateFact(spark: SparkSession, raw: String, curated: String,
-      targetPartitions: Int = 1): Unit =
-    writeCurated(transformFact(readRaw(spark, raw)), curated,
-      Seq("transaction_date"), targetPartitions)
+  def curateFact(spark: SparkSession, raw: String, curated: String): Unit =
+    writeCurated(transformFact(readRaw(spark, raw)), curated, Seq("transaction_date"))
 
   def curateCustomerDim(spark: SparkSession, raw: String, curated: String): Unit =
     writeCurated(transformCustomerDim(readRaw(spark, raw)), curated, Seq.empty)

@@ -8,9 +8,11 @@ import org.apache.spark.sql.SparkSession
   * `flows.py:285-384`; SURVEY §3.1).
   *
   * The reference runs six Prefect child flows strictly sequentially; here
-  * each flow is a plain Scala function over one SparkSession, and each is a
-  * single fused Spark job. Scheduling (the reference's `0 1 * * *` cron,
-  * `flows.py:390`) is out of engine scope per SURVEY §2.1 W1-W6.
+  * each flow is a plain Scala function over one SparkSession. Ingestion is
+  * one fused scan-and-write job; the curated fact flow is a scan stage plus
+  * a shuffle keyed on `transaction_date` into the write. Scheduling (the
+  * reference's `0 1 * * *` cron, `flows.py:390`) is out of engine scope per
+  * SURVEY §2.1 W1-W6.
   */
 object Lakehouse {
 
@@ -76,27 +78,26 @@ object Lakehouse {
   /** Session defaults for pipeline work. `partitionColumnTypeInference=false`
     * keeps `transaction_date` a *string* on read-back — it is the reference's
     * partition-key type (string via strftime, `data_processing.py:180`;
-    * SURVEY §7.4.7).
+    * SURVEY §7.4.7). `file:` roots get `ZoneFileSystem`, which sets
+    * permission bits without forking `chmod`.
     */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+    ZoneFileSystem.register(spark.sparkContext.hadoopConfiguration)
     spark
   }
 
   /** Master flow (reference `flows.py:285-384`): three ingestions, then
-    * three curations. `targetFactPartitions` mirrors the reference's
-    * target_partitions=1 default but is tunable — at 100 TB you want one
-    * file per partition *per final shuffle partition*, not a global
-    * single-partition barrier.
+    * three curations.
     */
   def masterFlow(spark: SparkSession, txnCsv: String, custCsv: String,
-      prodCsv: String, workDir: String, targetFactPartitions: Int = 1): Zones = {
+      prodCsv: String, workDir: String): Zones = {
     configure(spark)
     val z = ensureZones(workDir)
     Ingest.ingestTransactions(spark, txnCsv, z.rawTransactions)
     Ingest.ingestCustomers(spark, custCsv, z.rawCustomers)
     Ingest.ingestProducts(spark, prodCsv, z.rawProducts)
-    Curate.curateFact(spark, z.rawTransactions, z.curatedFact, targetFactPartitions)
+    Curate.curateFact(spark, z.rawTransactions, z.curatedFact)
     Curate.curateCustomerDim(spark, z.rawCustomers, z.curatedCustomerDim)
     Curate.curateProductDim(spark, z.rawProducts, z.curatedProductDim)
     z

@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.Paths
+
 import graft.Tables
 import graft.extensions.Det
 import org.apache.spark.sql.functions._
@@ -14,6 +16,14 @@ import org.apache.spark.sql.types.LongType
   * scan, so at 100 TB these read only the referenced columns' pages.
   */
 object GroupABC {
+
+  /** Per-process scratch directory of a round-trip query over dataset `d`,
+    * under `java.io.tmpdir`.
+    */
+  private def scratchDir(query: String, d: String): String =
+    Paths.get(System.getProperty("java.io.tmpdir"), "graft-scratch",
+      s"${query}_${d.replaceAll("[^A-Za-z0-9.]", "_")}_pid${ProcessHandle.current().pid()}")
+      .toString
 
   /** A1 ≙ P1/P2/P3 (reference data_processing.py:253-270, 301-319, 359-375):
     * explicit column pruning. ReadSchema in the scan carries only 4 columns.
@@ -176,7 +186,7 @@ object GroupABC {
       |FROM lineitem
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-    val scratch = s"/root/repo/target/scratch/c1_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val scratch = scratchDir("c1", d)
     Tables.lineitem(s, d)
       .select("l_orderkey", "l_extendedprice", "l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(scratch)
@@ -197,8 +207,7 @@ object GroupABC {
       |FROM documents
       |GROUP BY lang
       |ORDER BY lang""".stripMargin) { (s, d) =>
-    val scratch = s"/root/repo/target/scratch/c2_${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-      s"_pid${ProcessHandle.current().pid()}"
+    val scratch = scratchDir("c2", d)
     Tables.documents(s, d)
       .select("doc_id", "lang", "n_chars")
       .write.mode("overwrite").json(scratch)
@@ -226,8 +235,7 @@ object GroupABC {
       |FROM events
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, d) =>
-    val scratch = s"/root/repo/target/scratch/c3_${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-      s"_pid${ProcessHandle.current().pid()}"
+    val scratch = scratchDir("c3", d)
     Tables.events(s, d)
       .select("event_id", "event_type", "value")
       .write.mode("overwrite").orc(scratch)
@@ -252,8 +260,7 @@ object GroupABC {
       |FROM events
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, d) =>
-    val scratch = s"/root/repo/target/scratch/c4_${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-      s"_pid${ProcessHandle.current().pid()}"
+    val scratch = scratchDir("c4", d)
     Tables.events(s, d)
       .select("event_id", "event_type", "value")
       .write.mode("overwrite").option("header", "true").csv(scratch)

@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.file.Paths
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.pipeline._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** End-to-end pipeline test (SURVEY.md §5.4): generate reference-shape CSVs
   * (with malformed timestamps and null segments per FIXTURES.md §2), run the
@@ -79,6 +84,40 @@ class PipelineSpec extends SparkSpec {
     val someDate = fact.select("transaction_date").head().getString(0)
     val pruned = fact.filter($"transaction_date" === someDate)
     assert(pruned.count() > 0)
+  }
+
+  test("curated zone layout: one part- file per transaction_date directory") {
+    val dates = Paths.get(zones.curatedFact).toFile.listFiles()
+      .filter(_.getName.startsWith("transaction_date="))
+    assert(dates.length > 1)
+    for (d <- dates)
+      assert(d.listFiles().count(_.getName.startsWith("part-")) === 1, d)
+  }
+
+  test("curated fact write runs in more than one task") {
+    val group = s"curate-fact-layout-${System.nanoTime()}"
+    val groupStages = ConcurrentHashMap.newKeySet[Int]()
+    val writingTasks = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(groupStages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (groupStages.contains(e.stageId) && e.taskMetrics != null &&
+            e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writingTasks.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    val raw = zones.rawTransactions
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "curated fact layout")
+      Curate.curateFact(spark, raw, zones.curatedFact)
+      eventually(timeout(10.seconds))(assert(writingTasks.get() > 1))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("curated customer dim: null segments filled with Unknown") {
