@@ -150,7 +150,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Warm one-time session costs (JVM, codegen framework, parquet reader,
     // shuffle machinery) so the first measured query isn't charged for them.
-    spark.read.parquet(s"$sfDir/region.parquet").selectExpr("count(*)").collect()
+    Tables.region(spark, sfDir).selectExpr("count(*)").collect()
     spark.range(100000).selectExpr("sum(id % 7)").collect()
 
     // Dev-only filter: run just the named queries (comma-separated full

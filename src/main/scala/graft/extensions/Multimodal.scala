@@ -1,5 +1,6 @@
 package graft.extensions
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -1036,7 +1037,7 @@ object Multimodal {
       wide: Boolean = false): Dataset[MediaRow] = {
     implicit val enc = Encoders.product[MediaRow]
     media.toDF().write.mode("overwrite").parquet(path)
-    val back = media.sparkSession.read.parquet(path)
+    val back = Tables.readParquet(media.sparkSession, path)
     (if (wide) widen(back) else back).as[MediaRow]
   }
 

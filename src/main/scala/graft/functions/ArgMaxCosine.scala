@@ -15,7 +15,9 @@ import org.apache.spark.sql.types._
   * `max_by(cid, struct(acos, -cid))` semantics. Candidates whose cosine is
   * null (length mismatch, null element, zero norm) are skipped like
   * `max_by` skips null ordering keys; if no candidate has a cosine (or the
-  * list is empty), the result is null.
+  * list is empty), the result is null. In particular a zero-norm `left`
+  * gives every candidate a null cosine, so its result is null, not the
+  * first cid.
   *
   * This is the nearest-centroid assignment of every IVF/k-means path
   * (h15/h56/h64/h94/h104/h108/h110): an argmax over a BOUNDED candidate set

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -14,7 +15,7 @@ object Curate {
     * `Lakehouse.configure` disables partition-column type inference.
     */
   def readRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.readParquet(spark, path)
 
   /** P1 + C1 (reference `data_processing.py:253-284`): strict 9-column fact
     * projection (presence-checked like `:266-268`) and analytical casts —

@@ -190,7 +190,7 @@ object GroupABC {
     Tables.lineitem(s, d)
       .select("l_orderkey", "l_extendedprice", "l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(scratch)
-    s.read.parquet(scratch)
+    Tables.readParquet(s, scratch)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), Det.exactSum(col("l_extendedprice")).as("total"))
       .orderBy("l_returnflag")

@@ -79,4 +79,25 @@ class Round22Spec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
     assert(out(1L) && out(2L))
   }
+
+  test("ArgMaxCosine: every candidate cosine null (zero norm) → null") {
+    import graft.functions.ArgMaxCosine
+    val cands = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)))
+    val df = Seq(
+      (1L, Seq(0f, 0f), cands),                              // zero-norm vector
+      (2L, Seq(1f, 1f), Seq((1L, Seq(0f, 0f)), (2L, Seq(0f, 0f)))), // zero-norm candidates
+      (3L, Seq(1f, 1f, 1f), cands),                          // length mismatch
+      (4L, Seq(1f, 1f), Seq((1L, Seq(0f, 0f)), (2L, Seq(0f, 1f)))), // one scorable candidate
+      (5L, Seq(1f, 1f), Seq.empty[(Long, Seq[Float])])       // no candidates
+    ).toDF("id", "v", "c")
+    val argmax = GraftColumnBridge.column(ArgMaxCosine(
+      GraftColumnBridge.expression(col("v")), GraftColumnBridge.expression(col("c"))))
+    // over the local relation the optimizer evaluates the projection
+    // interpreted; behind a shuffle it runs whole-stage codegen'd
+    for ((input, mode) <- Seq(df -> "interpreted", df.repartition(2) -> "codegen")) {
+      val out = input.select(col("id"), argmax.as("cid")).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+      assert(out === Map(1L -> None, 2L -> None, 3L -> None, 4L -> Some(2L), 5L -> None), mode)
+    }
+  }
 }
