@@ -58,20 +58,14 @@ case class ArgMaxCosine(left: Expression, right: Expression)
     ArgMaxCosine.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val res = ctx.freshName("res")
-      s"""
-         |java.lang.Long $res = graft.functions.ArgMaxCosine.compute($a, $b);
-         |if ($res == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $res.longValue(); }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => Kernels.callCode(ctx, ev,
+      s"graft.functions.ArgMaxCosine.compute($a, $b)"))
 }
 
 object ArgMaxCosine {
   /** Candidate-order scan, strictly-greater replacement (ties → the
     * earliest candidate, i.e. the smallest cid when the caller sorts by
-    * cid). Static so interpreted eval and codegen share one implementation.
+    * cid).
     */
   def compute(vec: ArrayData, cents: ArrayData): java.lang.Long = {
     val k = cents.numElements()

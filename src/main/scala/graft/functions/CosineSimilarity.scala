@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Native Catalyst expression: cosine similarity of two `array<float>`
   * columns, with whole-stage codegen.
@@ -16,7 +13,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * `aggregate(zip_with(a,b,*), 0.0, +) / (sqrt(aggregate(a,0.0,+x²)) * ...)`
   * on the similarity hot paths: HOF lambdas are interpreted (no doGenCode)
   * and allocate an intermediate product array per row, where this expression
-  * is one fused, allocation-free loop inside WholeStageCodegen. Numeric
+  * is one fused loop, called from inside WholeStageCodegen. Numeric
   * semantics are IDENTICAL to the HOF form (and to the DuckDB oracle's
   * `list_aggregate('sum')`): per-index double promotion, strictly sequential
   * index-order accumulation of dot/norm sums, then dot/(√na·√nb) — so
@@ -53,45 +50,16 @@ case class CosineSimilarity(left: Expression, right: Expression)
       a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  boolean $bad = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { $bad = true; break; }
-         |    final double $xi = (double) $a.getFloat($i);
-         |    final double $yi = (double) $b.getFloat($i);
-         |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |  }
-         |  if ($bad || $na == 0.0 || $nb == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |  }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => Kernels.callCode(ctx, ev,
+      s"graft.functions.CosineSimilarity.compute($a, $b)"))
 }
 
 object CosineSimilarity {
-  /** The one cosine implementation (interpreted side) — identical op order
-    * to the codegen template above and to the retired HOF form: per-index
-    * double promotion, strictly sequential accumulation, dot/(√na·√nb).
-    * Exposed so composite expressions ([[ArgMaxCosine]]) reuse the exact
-    * same arithmetic instead of copying it. Returns null (boxed) on length
-    * mismatch, null element, or zero-norm input.
+  /** The one cosine implementation — the retired HOF form's op order:
+    * per-index double promotion, strictly sequential accumulation,
+    * dot/(√na·√nb). Composite expressions ([[ArgMaxCosine]]) reuse it
+    * instead of copying the arithmetic. Returns null on length mismatch,
+    * null element, or zero-norm input.
     */
   def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
@@ -108,91 +76,4 @@ object CosineSimilarity {
     if (na == 0.0 || nb == 0.0) null
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
-}
-
-/** Registration surface for graft's native functions. */
-object GraftFunctions {
-
-  private type Descriptor =
-    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
-
-  /** Extract a compile-time integer parameter from a SQL argument. The
-    * Scala constructors take these as plain `Int`s (they size codegen'd
-    * stack arrays and shift masks), so the SQL surface requires a FOLDABLE
-    * integer — a literal or constant expression — matching how Spark's own
-    * parameter-like arguments (e.g. `ntile(n)`, `approx_count_distinct`'s
-    * rsd) are constrained.
-    */
-  private def foldableInt(e: Expression, fn: String, param: String): Int = {
-    require(e.foldable && e.dataType == IntegerType,
-      s"$fn: $param must be a constant INT, got ${e.sql}")
-    val v = e.eval()
-    require(v != null, s"$fn: $param must not be NULL")
-    v.asInstanceOf[Int]
-  }
-
-  val cosineSimilarityDescriptor: Descriptor = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSimilarity].getCanonicalName, "cosine_sim"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "cosine_sim expects exactly 2 arguments")
-      CosineSimilarity(children.head, children(1))
-    })
-
-  /** `simhash_long(tokens ARRAY<STRING>, bits INT)` — see [[SimHashLong]]. */
-  val simHashLongDescriptor: Descriptor = (
-    FunctionIdentifier("simhash_long"),
-    new ExpressionInfo(classOf[SimHashLong].getCanonicalName, "simhash_long"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        "simhash_long expects exactly 2 arguments: (tokens, bits)")
-      SimHashLong(children.head,
-        foldableInt(children(1), "simhash_long", "bits"))
-    })
-
-  /** `winnow_mins(hashes ARRAY<STRING>, w INT)` — see [[WinnowMins]]. */
-  val winnowMinsDescriptor: Descriptor = (
-    FunctionIdentifier("winnow_mins"),
-    new ExpressionInfo(classOf[WinnowMins].getCanonicalName, "winnow_mins"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        "winnow_mins expects exactly 2 arguments: (shingles, w)")
-      WinnowMins(children.head, foldableInt(children(1), "winnow_mins", "w"))
-    })
-
-  /** `max_run_length(tokens ARRAY<STRING>)` — see [[MaxRunLength]]. */
-  val maxRunLengthDescriptor: Descriptor = (
-    FunctionIdentifier("max_run_length"),
-    new ExpressionInfo(classOf[MaxRunLength].getCanonicalName, "max_run_length"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "max_run_length expects exactly 1 argument")
-      MaxRunLength(children.head)
-    })
-
-  /** Every graft native function, in registration order. */
-  val all: Seq[Descriptor] = Seq(
-    cosineSimilarityDescriptor,
-    simHashLongDescriptor,
-    winnowMinsDescriptor,
-    maxRunLengthDescriptor)
-
-  /** Imperative registration onto an existing session (SQL names
-    * `cosine_sim`, `simhash_long`, `winnow_mins`, `max_run_length`); new
-    * sessions can instead use [[GraftExtensions]] via
-    * `spark.sql.extensions=graft.functions.GraftExtensions`.
-    */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-}
-
-/** SparkSessionExtensions hook: `--conf
-  * spark.sql.extensions=graft.functions.GraftExtensions` makes every graft
-  * native function ([[GraftFunctions.all]]) available in every SQL/DataFrame
-  * context of the session.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.all.foreach(ext.injectFunction)
 }

@@ -41,34 +41,27 @@ case class DotWeights(child: Expression, weights: Array[Long])
   override protected def withNewChildInternal(
       newChild: Expression): DotWeights = copy(child = newChild)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var z = 0L
-    var i = 0
-    while (i < n) { z += weights(arr.getInt(i)); i += 1 }
-    z
-  }
+  override def nullSafeEval(input: Any): Any =
+    DotWeights.compute(input.asInstanceOf[ArrayData], weights)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val wRef = ctx.addReferenceObj("dotWeights", weights, "long[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val z = ctx.freshName("z")
-      s"""
-         |final int $n = $a.numElements();
-         |long $z = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $z += $wRef[$a.getInt($i)];
-         |}
-         |${ev.value} = $z;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.DotWeights.compute($a, $wRef)"))
   }
 
   // Array-valued case-class field: default equals/canonicalization compare
   // arrays by reference, which is correct here — each training step's
   // weights are a distinct model state, and no two DotWeights nodes with
   // different arrays may ever be deduplicated into one.
+}
+
+object DotWeights {
+  def compute(arr: ArrayData, weights: Array[Long]): java.lang.Long = {
+    val n = arr.numElements()
+    var z = 0L
+    var i = 0
+    while (i < n) { z += weights(arr.getInt(i)); i += 1 }
+    z
+  }
 }

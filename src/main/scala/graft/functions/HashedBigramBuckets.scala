@@ -49,13 +49,8 @@ case class HashedBigramBuckets(child: Expression, nBuckets: Int)
     HashedBigramBuckets.compute(input.asInstanceOf[ArrayData], nBuckets)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} =
-         |  graft.functions.HashedBigramBuckets.compute($a, $nBuckets);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.HashedBigramBuckets.compute($a, $nBuckets)"))
 }
 
 object HashedBigramBuckets {
@@ -63,7 +58,6 @@ object HashedBigramBuckets {
 
   /** Null on null elements (mirrors the retired HOF chain's null
     * propagation); otherwise the sorted distinct bucket set + bias.
-    * Static so interpreted eval and codegen share one implementation.
     */
   def compute(arr: ArrayData, nBuckets: Int): GenericArrayData = {
     val n = arr.numElements()

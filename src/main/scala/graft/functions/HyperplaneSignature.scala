@@ -41,15 +41,27 @@ case class HyperplaneSignature(child: Expression, table: Int, nPlanes: Int)
   }
   override def dataType: DataType = StringType
   override def prettyName: String = "hyperplane_sig"
+  override def nullable: Boolean = true // a null element gives null
   override protected def withNewChildInternal(newChild: Expression): HyperplaneSignature =
     copy(child = newChild)
 
-  /** Codegen entry point: the ±1 row of hyperplane `p`, length ≥ `minLen`. */
-  def row(p: Int, minLen: Int): Array[Byte] =
-    HyperplaneSignature.signRow(table, p, minLen)
+  override def nullSafeEval(input: Any): Any =
+    HyperplaneSignature.compute(input.asInstanceOf[ArrayData], table, nPlanes)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  // `table` is read off the referenced expression, not spliced, so every
+  // LSH table shares one generated class
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v => {
+      val self = ctx.addReferenceObj("hyperplaneSig", this,
+        classOf[HyperplaneSignature].getName)
+      Kernels.callCode(ctx, ev,
+        s"graft.functions.HyperplaneSignature.compute($v, $self.table(), $nPlanes)")
+    })
+}
+
+object HyperplaneSignature {
+
+  def compute(v: ArrayData, table: Int, nPlanes: Int): UTF8String = {
     val n = v.numElements()
     val q = new Array[Long](n)
     var i = 0
@@ -61,7 +73,7 @@ case class HyperplaneSignature(child: Expression, table: Int, nPlanes: Int)
     val bits = new Array[Char](nPlanes)
     var p = 0
     while (p < nPlanes) {
-      val r = row(p, n)
+      val r = signRow(table, p, n)
       var dot = 0L
       var j = 0
       while (j < n) { dot += r(j) * q(j); j += 1 }
@@ -70,45 +82,6 @@ case class HyperplaneSignature(child: Expression, table: Int, nPlanes: Int)
     }
     UTF8String.fromString(new String(bits))
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val self = ctx.addReferenceObj("hyperplaneSig", this,
-        classOf[HyperplaneSignature].getName)
-      val n = ctx.freshName("n")
-      val q = ctx.freshName("q")
-      val p = ctx.freshName("p")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val r = ctx.freshName("row")
-      val dot = ctx.freshName("dot")
-      val bits = ctx.freshName("bits")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $n = $v.numElements();
-         |final long[] $q = new long[$n];
-         |boolean $bad = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($v.isNullAt($i)) { $bad = true; break; }
-         |  $q[$i] = (long) Math.floor(((double) $v.getFloat($i)) * 1.0E6 + 0.5);
-         |}
-         |if ($bad) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final char[] $bits = new char[$nPlanes];
-         |  for (int $p = 0; $p < $nPlanes; $p++) {
-         |    final byte[] $r = $self.row($p, $n);
-         |    long $dot = 0L;
-         |    for (int $j = 0; $j < $n; $j++) $dot += $r[$j] * $q[$j];
-         |    $bits[$p] = $dot >= 0 ? '1' : '0';
-         |  }
-         |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(new String($bits));
-         |}
-       """.stripMargin
-    })
-}
-
-object HyperplaneSignature {
 
   // (table, plane) -> ±1 component row, grown in powers of two on demand.
   // md5 is only ever computed here — once per component per process.

@@ -63,10 +63,25 @@ case class MarkerHits(child: Expression, markerSets: Seq[Seq[String]])
     m
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    MarkerHits.compute(input.asInstanceOf[ArrayData], masks, markerSets.size)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val mapRef = ctx.addReferenceObj("markerMasks", masks,
+      classOf[java.util.HashMap[UTF8String, Integer]].getName)
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.MarkerHits.compute($a, $mapRef, ${markerSets.size})"))
+  }
+}
+
+object MarkerHits {
+  /** Per-set hit counts of `arr` against `masks` (token → bitmask over the
+    * `nSets` sets).
+    */
+  def compute(arr: ArrayData, masks: java.util.HashMap[UTF8String, Integer],
+      nSets: Int): GenericArrayData = {
     val n = arr.numElements()
-    val counts = new Array[Int](markerSets.size)
+    val counts = new Array[Int](nSets)
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
@@ -82,36 +97,5 @@ case class MarkerHits(child: Expression, markerSets: Seq[Seq[String]])
       i += 1
     }
     new GenericArrayData(counts)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mapRef = ctx.addReferenceObj("markerMasks", masks,
-      classOf[java.util.HashMap[UTF8String, Integer]].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val counts = ctx.freshName("counts")
-      val m = ctx.freshName("m")
-      val mask = ctx.freshName("mask")
-      val k = markerSets.size
-      s"""
-         |final int $n = $a.numElements();
-         |final int[] $counts = new int[$k];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    Integer $m = (Integer) $mapRef.get($a.getUTF8String($i));
-         |    if ($m != null) {
-         |      int $mask = $m.intValue();
-         |      while ($mask != 0) {
-         |        $counts[java.lang.Integer.numberOfTrailingZeros($mask)]++;
-         |        $mask &= $mask - 1;
-         |      }
-         |    }
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($counts);
-       """.stripMargin
-    })
   }
 }

@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
   * §A1.1). The alternatives both lose at scale: an explode → groupBy(doc,
   * token) → max(count) pipeline shuffles a (doc, token) pair stream two
   * aggregation levels deep, and a higher-order `aggregate` lambda is
-  * interpreted per element (no doGenCode). This expression is one
-  * allocation-free loop inside WholeStageCodegen, so the whole metric
-  * family stays in the scan stage.
+  * interpreted per element (no doGenCode). This expression is one loop
+  * called from inside WholeStageCodegen, so the whole metric family stays
+  * in the scan stage.
   *
   * Null semantics: null array → null; any null ELEMENT → null (tokenizers
   * never produce null tokens, so a null element means the caller passed the
@@ -41,8 +41,16 @@ case class MaxRunLength(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(
       newChild: Expression): MaxRunLength = copy(child = newChild)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    MaxRunLength.compute(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.MaxRunLength.compute($a)"))
+}
+
+object MaxRunLength {
+  def compute(arr: ArrayData): java.lang.Integer = {
     val n = arr.numElements()
     if (n == 0) return 0
     if (arr.isNullAt(0)) return null
@@ -60,35 +68,4 @@ case class MaxRunLength(child: Expression) extends UnaryExpression {
     }
     best
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val run = ctx.freshName("run")
-      val best = ctx.freshName("best")
-      val prev = ctx.freshName("prev")
-      val cur = ctx.freshName("cur")
-      val bad = ctx.freshName("bad")
-      val utf8 = classOf[org.apache.spark.unsafe.types.UTF8String].getName
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.value} = 0;
-         |} else if ($a.isNullAt(0)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  $utf8 $prev = $a.getUTF8String(0);
-         |  int $run = 1; int $best = 1; boolean $bad = false;
-         |  for (int $i = 1; $i < $n; $i++) {
-         |    if ($a.isNullAt($i)) { $bad = true; break; }
-         |    final $utf8 $cur = $a.getUTF8String($i);
-         |    if ($cur.equals($prev)) { $run++; } else { $run = 1; }
-         |    if ($run > $best) { $best = $run; }
-         |    $prev = $cur;
-         |  }
-         |  if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $best; }
-         |}
-       """.stripMargin
-    })
 }

@@ -55,13 +55,8 @@ case class MinHashSignature(child: Expression, numHashes: Int)
     MinHashSignature.compute(input.asInstanceOf[ArrayData], numHashes)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} =
-         |  graft.functions.MinHashSignature.compute($a, $numHashes);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.MinHashSignature.compute($a, $numHashes)"))
 }
 
 object MinHashSignature {

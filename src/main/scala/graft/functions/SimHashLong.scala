@@ -27,9 +27,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * corpus-token-sized shuffle per signature build, paid by every consumer
   * of the SimHash family (h7, the near-dup pair graph, its four graph
   * analytics). This expression computes the same integer votes in one
-  * allocation-light codegen'd loop per row: md5 straight to raw digest
-  * bytes (nibble high-bit = one shift-and-mask — no hex string, no
-  * per-nibble substring), votes in a stack array, ZERO exchanges.
+  * loop per row: md5 straight to raw digest bytes (nibble high-bit = one
+  * shift-and-mask — no hex string, no per-nibble substring), votes in one
+  * int array, ZERO exchanges.
   *
   * Null semantics: null array → null; EMPTY array → null — a doc with no
   * tokens has no signature, mirroring the explode+aggregate form where
@@ -53,8 +53,16 @@ case class SimHashLong(child: Expression, bits: Int) extends UnaryExpression {
   override protected def withNewChildInternal(
       newChild: Expression): SimHashLong = copy(child = newChild)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHashLong.compute(input.asInstanceOf[ArrayData], bits)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.SimHashLong.compute($a, $bits)"))
+}
+
+object SimHashLong {
+  def compute(arr: ArrayData, bits: Int): java.lang.Long = {
     val n = arr.numElements()
     if (n == 0) return null
     val votes = new Array[Int](bits)
@@ -79,43 +87,4 @@ case class SimHashLong(child: Expression, bits: Int) extends UnaryExpression {
     }
     sig
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val hi = ctx.freshName("hi")
-      val votes = ctx.freshName("votes")
-      val sig = ctx.freshName("sig")
-      val bad = ctx.freshName("bad")
-      val digest = classOf[DigestUtils].getName
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final int[] $votes = new int[$bits];
-         |  boolean $bad = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i)) { $bad = true; break; }
-         |    final byte[] $d = $digest.md5($a.getUTF8String($i).getBytes());
-         |    for (int $j = 0; $j < $bits; $j++) {
-         |      final int $hi = ($d[$j >> 1] >> ((($j & 1) == 0) ? 7 : 3)) & 1;
-         |      $votes[$j] += ($hi == 1) ? 1 : -1;
-         |    }
-         |  }
-         |  if ($bad) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    long $sig = 0L;
-         |    for (int $j = 0; $j < $bits; $j++) {
-         |      if ($votes[$j] >= 0) { $sig |= 1L << ($bits - 1 - $j); }
-         |    }
-         |    ${ev.value} = $sig;
-         |  }
-         |}
-       """.stripMargin
-    })
 }

@@ -55,18 +55,12 @@ case class TokenBucketCounts(child: Expression) extends UnaryExpression {
     TokenBucketCounts.compute(input.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = graft.functions.TokenBucketCounts.compute($a);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.TokenBucketCounts.compute($a)"))
 }
 
 object TokenBucketCounts {
-  /** md5 per token → first-12-bit bucket, sort, run-length-encode. Static
-    * so interpreted eval and codegen share one implementation.
-    */
+  /** md5 per token → first-12-bit bucket, sort, run-length-encode. */
   def compute(arr: ArrayData): GenericArrayData = {
     val n = arr.numElements()
     if (n == 0) return new GenericArrayData(new Array[Any](0))

@@ -61,17 +61,13 @@ case class TrigramBuckets(child: Expression, nBuckets: Int)
     TrigramBuckets.compute(input.asInstanceOf[UTF8String], nBuckets)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = graft.functions.TrigramBuckets.compute($a, $nBuckets);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.TrigramBuckets.compute($a, $nBuckets)"))
 }
 
 object TrigramBuckets {
   /** One pass over the UTF-8 bytes: code-point boundary offsets, md5 per
     * 3-code-point byte slice, sort + run-length-encode the bucket ids.
-    * Static so interpreted eval and codegen share the one implementation.
     */
   def compute(t: UTF8String, nBuckets: Int): GenericArrayData = {
     val bytes = t.getBytes

@@ -62,8 +62,16 @@ case class WinnowMins(child: Expression, w: Int) extends UnaryExpression {
   override protected def withNewChildInternal(
       newChild: Expression): WinnowMins = copy(child = newChild)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    WinnowMins.compute(input.asInstanceOf[ArrayData], w)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => Kernels.callCode(ctx, ev,
+      s"graft.functions.WinnowMins.compute($a, $w)"))
+}
+
+object WinnowMins {
+  def compute(arr: ArrayData, w: Int): GenericArrayData = {
     val n = arr.numElements()
     val hashes = new Array[UTF8String](n)
     var i = 0
@@ -89,45 +97,4 @@ case class WinnowMins(child: Expression, w: Int) extends UnaryExpression {
     }
     new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val mn = ctx.freshName("mn")
-      val hashes = ctx.freshName("hashes")
-      val seen = ctx.freshName("seen")
-      val out = ctx.freshName("out")
-      val bad = ctx.freshName("bad")
-      val utf8 = classOf[UTF8String].getName
-      val gad = classOf[GenericArrayData].getName
-      val digest = classOf[DigestUtils].getName
-      s"""
-         |final int $n = $a.numElements();
-         |final $utf8[] $hashes = new $utf8[$n];
-         |boolean $bad = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { $bad = true; break; }
-         |  $hashes[$i] = $utf8.fromString(
-         |    $digest.md5Hex($a.getUTF8String($i).getBytes()));
-         |}
-         |if ($bad) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final int $m = $n - $w + 1 > 0 ? $n - $w + 1 : 0;
-         |  final java.util.HashSet<$utf8> $seen = new java.util.HashSet<$utf8>();
-         |  final java.util.ArrayList<Object> $out = new java.util.ArrayList<Object>();
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    $utf8 $mn = $hashes[$i];
-         |    for (int $j = $i + 1; $j < $i + $w; $j++) {
-         |      if ($hashes[$j].compareTo($mn) < 0) { $mn = $hashes[$j]; }
-         |    }
-         |    if ($seen.add($mn)) { $out.add($mn); }
-         |  }
-         |  ${ev.value} = new $gad($out.toArray());
-         |}
-       """.stripMargin
-    })
 }
