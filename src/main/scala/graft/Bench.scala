@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness: times every declared query at the given scale factor
   * and emits TWO machine-readable JSON lines on stdout — a per-query detail
@@ -89,7 +88,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Per-attempt cap: slowest declared query medians ~5 s at sf0.1, and the
     // worst documented HOST freeze measured ~127 s on a ~1 s query — the cap
     // sits above that so a freeze costs one discarded attempt, not a kill.
@@ -114,40 +112,7 @@ object Bench {
     // The constant is sf0.1-specific BY CONSTRUCTION; at another SF
     // override via env.
     val stallSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_STALL_SEC", "25").toDouble
-    // Scan-split floor. Round 21 lowered the default to 512 KB on a
-    // plausible scale argument (sub-4 MB fixture tables scan single-task)
-    // but shipped it without an A/B; round 22 ran the control — two full
-    // 32-core benches in one window: 4 MB total 160.7 s vs 512 KB 169.2 s,
-    // geomean speedup of 4 MB over 512 KB 1.045× across all 179 queries
-    // (and r21's 8-core run already beat its 32-core run, the signature of
-    // task-overhead domination). At sf0.1 the per-task overhead of many
-    // sub-MB splits exceeds the parallelism gain, so the STOCK 4 MB floor
-    // is restored as the measured default; at production sizes the floor
-    // is a no-op either way (bytes/core ≫ maxPartitionBytes). Still
-    // env-overridable for scaling probes: SPARK_GRAFT_OPEN_COST=524288
-    // reproduces the round-21 config.
-    val openCost = sys.env.getOrElse("SPARK_GRAFT_OPEN_COST",
-      (4 * 1024 * 1024).toString)
-    // AQE coalescing knob, STOCK DEFAULT (round 22): parallelismFirst=false
-    // (honor advisoryPartitionSizeInBytes — Spark's own doc recommendation,
-    // and the plausible fix for the 8-core suite beating the 32-core suite)
-    // was A/B'd twice at 32 cores with frozen code and did NOT demonstrably
-    // win: clean pair 158.4 s (false) vs 161.6 s (true) but per-query
-    // geomean 1.026 vs 0.881 across the two pairs, pooled best-of-2 totals
-    // 151.5 (false) vs 138.0 (true). Conflicting inside the documented
-    // window noise ⇒ ship the stock default, keep the knob for scaling
-    // probes (the round-21 lesson: no unproven config twiddles in the
-    // measured bench session).
-    val parFirst = sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", openCost)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", parFirst)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
     // Warm one-time session costs (JVM, codegen framework, parquet reader,
     // shuffle machinery) so the first measured query isn't charged for them.
     Tables.region(spark, sfDir).selectExpr("count(*)").collect()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,19 +6,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // driver contract: Verify <sfDir> <outDir>. Optional dev-only 3rd arg:
     // comma-separated query names — dump just those (targeted oracle checks
-    // while iterating, without paying the full 151-query run)
+    // while iterating, without paying the full 179-query run)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -95,19 +95,10 @@ object Classifier {
       steps: Int): (Array[Long], DataFrame, Long) = {
     require(nBuckets >= 2 && steps >= 1,
       s"need nBuckets >= 2 and steps >= 1, got $nBuckets/$steps")
-    // repartition BEFORE the featurize projection when the input layout is
-    // narrower than the cluster: the md5-per-bigram work and every
-    // subsequent gradient pass otherwise inherit the FILE layout (a
-    // single-file corpus serializes the whole trainer through one task —
-    // measured 4 s featurize + 1 s/step single-core at sf0.1, ~0.4 s +
-    // 0.2 s/step at 32-way). Conditional, because an already-wide corpus
-    // should NOT pay a corpus-sized raw-text exchange for nothing. Row
-    // placement does not affect results: every step aggregate is an exact
-    // integer sum.
-    val par = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val src = if (docs.rdd.getNumPartitions < par) docs.repartition(par)
-              else docs
-    val rows = hashedBigramRows(src, idCol, textCol, seedRule, nBuckets)
+    // widened BEFORE the featurize projection: the md5-per-bigram work and
+    // every gradient pass over the checkpointed rows keep its layout
+    val rows = hashedBigramRows(Parallelism.widen(docs), idCol, textCol,
+        seedRule, nBuckets)
       .localCheckpoint(eager = false)
     val n = rows.count()
     // the physical scan over the checkpointed rows, built ONCE and reused
@@ -343,12 +334,9 @@ object Classifier {
     require(seedRules.nonEmpty, "need at least one head")
     require(nBuckets >= 2 && steps >= 1,
       s"need nBuckets >= 2 and steps >= 1, got $nBuckets/$steps")
-    // same conditional pre-featurize repartition as trainState (the
-    // single-file-corpus parallelism lesson); same exactness argument
-    val par = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val src = if (docs.rdd.getNumPartitions < par) docs.repartition(par)
-              else docs
-    val rows = hashedBigramRowsMulti(src, idCol, textCol, seedRules, nBuckets)
+    // widened before the featurize projection, as in trainState
+    val rows = hashedBigramRowsMulti(Parallelism.widen(docs), idCol, textCol,
+        seedRules, nBuckets)
       .localCheckpoint(eager = false)
     val n = rows.count()
     // ordinals: 0 = id, 1 = ys (array<int>, one label per head), 2 = js

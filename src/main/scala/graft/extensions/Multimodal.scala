@@ -87,26 +87,6 @@ case class MediaMjpegVerify(media_id: Long, width: Long, height: Long,
   */
 object Multimodal {
 
-  /** Repartition a narrower-than-cluster relation before a HEAVY per-row
-    * codec pass: a single-file media table otherwise serializes every
-    * decode through ONE task — measured 2.4 s single-core vs ~0.3 s wide
-    * on h102's per-frame ImageIO JPEG verify. Round-22 scope-tightening
-    * (VERDICT item 3): round 21 applied this to EVERY media constructor
-    * and read-back, which regressed the cheap paths ~2× (h14 0.38→0.80 s,
-    * h100 0.59→1.09 s) — their per-row work is a few-hundred-byte integer
-    * loop, far below the exchange it bought. Now only the ImageIO-bound
-    * passes widen (toMjpegMedia's per-frame JPEG encode; h102's read-back
-    * feeding mjpegVerifyStats' decode+re-encode+decode per frame). At
-    * production scale a real media table's splits already exceed the
-    * cluster and the conditional is a no-op; row placement cannot affect
-    * results (all codec passes are per-row, all declared outputs totally
-    * ordered).
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
   /** Codec contract: one instance is created per partition (cheap here; a
     * real codec would hold native handles — hence per-partition, not per-row).
     */
@@ -705,8 +685,8 @@ object Multimodal {
   def toMjpegMedia(docs: DataFrame, idCol: String): Dataset[MediaRow] = {
     implicit val enc = Encoders.product[MediaRow]
     // ImageIO-bound constructor (a real JPEG encode per frame) — the one
-    // media fixture builder that keeps the widen() pre-pass (see widen)
-    widen(docs.select(col(idCol).cast("long").as("media_id")))
+    // media fixture builder that widens (see roundTripParquet)
+    Parallelism.widen(docs.select(col(idCol).cast("long").as("media_id")))
       .as[Long](Encoders.scalaLong)
       .mapPartitions(it => it.map { id =>
         val w = (8 + id % 5).toInt; val h = (6 + id % 4).toInt
@@ -1030,15 +1010,16 @@ object Multimodal {
     * pass (small fixture files pack into one or two splits under
     * openCostInBytes batching, serializing the decode through one task) —
     * opt-in per call site because the exchange only pays for itself when
-    * the per-row work is ImageIO-sized, not an integer byte loop (see
-    * [[widen]]).
+    * the per-row work is ImageIO-sized (2.4 s one task vs ~0.3 s wide on
+    * h102's JPEG verify), not an integer byte loop (widening those doubled
+    * them: h14 0.38 → 0.80 s).
     */
   def roundTripParquet(media: Dataset[MediaRow], path: String,
       wide: Boolean = false): Dataset[MediaRow] = {
     implicit val enc = Encoders.product[MediaRow]
     media.toDF().write.mode("overwrite").parquet(path)
     val back = Tables.readParquet(media.sparkSession, path)
-    (if (wide) widen(back) else back).as[MediaRow]
+    (if (wide) Parallelism.widen(back) else back).as[MediaRow]
   }
 
   /** Decode pass: binary → typed metadata. Iterator-to-iterator (no partition

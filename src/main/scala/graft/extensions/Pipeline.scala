@@ -124,13 +124,11 @@ object Pipeline {
     // column instead of a fresh regex-tokenize pass per stage (six corpus
     // scans of the most expensive scan-side op, for numbers that cannot
     // change after this projection)
-    // Stage-0 relation (round 21): repartition a narrower-than-cluster
-    // input FIRST (the Classifier.trainState lesson — a single-file corpus
-    // otherwise serializes every scan-side signal through one task), then
-    // compute the carried token count AND the stage-1 keep verdict in one
-    // layered projection pass ([[TextAnalysis.withCleanKeep]] — the same
-    // signal builders as the h22 audit relation, so the gate cannot
-    // drift), and checkpoint it. The checkpoint is load-bearing twice:
+    // Stage-0 relation: widen a narrow input FIRST ([[Parallelism.widen]]
+    // — every scan-side signal is per-row work), then compute the carried
+    // token count AND the stage-1 keep verdict in one layered projection
+    // pass ([[TextAnalysis.withCleanKeep]] — the same signal builders as the
+    // h22 audit relation, so the gate cannot drift), and checkpoint it. The checkpoint is load-bearing twice:
     // it stops Catalyst from pushing the keep filter back below the
     // repartition onto the single-partition scan, and stage 1 plus the
     // sIn ledger cell read the materialized rows instead of re-running
@@ -138,11 +136,8 @@ object Pipeline {
     // exchange (the old langId), a corpus self-join (langId ⋈ quality),
     // and a third corpus join (base ⋈ keep-ids) — three exchanges for a
     // per-row predicate (guide §2.4).
-    val par = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val src = if (docs.rdd.getNumPartitions < par) docs.repartition(par)
-              else docs
     val base = TextAnalysis.withCleanKeep(
-      src.select(col(idCol), col(textCol), col(domainCol),
+      Parallelism.widen(docs).select(col(idCol), col(textCol), col(domainCol),
         coalesce(size(TextOps.tokens(col(textCol))), lit(0)).cast("long")
           .as("__ntok")),
       textCol, "__keep").localCheckpoint(eager = false)

@@ -852,15 +852,8 @@ object TextAnalysis {
     */
   private[graft] def nbDocBuckets(docs: DataFrame, idCol: String,
       textCol: String, langCol: String, nBuckets: Int): DataFrame = {
-    // repartition before the normalize+explode projections when the input
-    // layout is narrower than the cluster — a single-file corpus would
-    // otherwise serialize the trigram explosion through one task (the
-    // trainState lesson); an already-wide corpus skips the exchange.
-    // Integer-sum aggregates make row placement irrelevant to the result.
-    val par = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val src = if (docs.rdd.getNumPartitions < par) docs.repartition(par)
-              else docs
-    val base = src
+    // widened before the normalize+explode projections
+    val base = Parallelism.widen(docs)
       .select(col(idCol), col(langCol).as("lang_true"),
         TextOps.normalized(col(textCol)).as("__t"))
       .filter(length(col("__t")) >= 3)

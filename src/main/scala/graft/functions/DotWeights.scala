@@ -21,10 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * order-independent addition; ClassifierSpec's driver replay and the
   * h116/h121/h123 oracles pin them).
   *
-  * Null array → null (featurized rows never carry one); elements index
-  * 0-based into `weights` and are in range by construction (the featurizer
-  * emits `% nBuckets` plus the bias bucket `nBuckets`, and `weights` has
-  * `nBuckets + 1` entries).
+  * Null array or null element → null, as the fold gave (featurized rows
+  * never carry either); elements index 0-based into `weights` and are in
+  * range by construction (the featurizer emits `% nBuckets` plus the bias
+  * bucket `nBuckets`, and `weights` has `nBuckets + 1` entries).
   */
 case class DotWeights(child: Expression, weights: Array[Long])
     extends UnaryExpression {
@@ -61,7 +61,11 @@ object DotWeights {
     val n = arr.numElements()
     var z = 0L
     var i = 0
-    while (i < n) { z += weights(arr.getInt(i)); i += 1 }
+    while (i < n) {
+      if (arr.isNullAt(i)) return null
+      z += weights(arr.getInt(i))
+      i += 1
+    }
     z
   }
 }

@@ -169,10 +169,12 @@ object GroupF {
   /** RANGE-frame window (value-based frame, the semantics a ROWS frame
     * cannot express): per user, the trailing-10-minute event count and
     * value sum at each event. Frame membership is by ORDER-key distance
-    * (epoch seconds), so tied timestamps are peers and contribute to each
-    * other's frames in both engines. One shuffle on user_id, one sort, all
-    * aggregates in a single window pass; sums are exact decimals
-    * (order-independent) per the Q contract.
+    * (epoch seconds, floored on both sides: Spark's timestamp-to-long cast
+    * floors, and DuckDB's BIGINT cast of `epoch` would round), so tied
+    * timestamps are peers and contribute to each other's frames in both
+    * engines. One shuffle on user_id, one sort, all aggregates in a single
+    * window pass; sums are exact decimals (order-independent) per the Q
+    * contract.
     */
   val f9 = Q(
     "f9_range_frame",
@@ -181,7 +183,7 @@ object GroupF {
       |  CAST(count(*) OVER w AS BIGINT) AS trail_n,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS trail_value
       |FROM events
-      |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(epoch(ts) AS BIGINT)
+      |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
       |  RANGE BETWEEN 600 PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_id""".stripMargin) { (s, d) =>
     val w = Window.partitionBy("user_id")

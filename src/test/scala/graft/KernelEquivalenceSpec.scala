@@ -61,6 +61,8 @@ class KernelEquivalenceSpec extends SparkSpec {
     Row(4L, Seq(4, 4, 4)),
     Row(5L, Seq(1, null, 2)))
 
+  private val weights = Array(10L, -3L, 7L, 100L, 1L << 40)
+
   private val floats = ArrayType(FloatType)
   private val candidate = StructType(Seq(
     StructField("cid", LongType), StructField("centroid", floats)))
@@ -96,7 +98,7 @@ class KernelEquivalenceSpec extends SparkSpec {
   private val kernels: Seq[(String, DataFrame, Expression)] = Seq(
     ("cosine_sim", vectors, CosineSimilarity(x("a"), x("b"))),
     ("argmax_cosine", vectors, ArgMaxCosine(x("a"), x("c"))),
-    ("dot_weights", buckets, DotWeights(x("x"), Array(10L, -3L, 7L, 100L, 1L << 40))),
+    ("dot_weights", buckets, DotWeights(x("x"), weights)),
     ("hashed_bigram_buckets", tokens, HashedBigramBuckets(x("x"), 8)),
     ("hyperplane_sig", vectors, HyperplaneSignature(x("a"), 3, 16)),
     ("hyperplane_sig non-nullable input", dense, HyperplaneSignature(x("a"), 3, 16)),
@@ -119,25 +121,38 @@ class KernelEquivalenceSpec extends SparkSpec {
     }
   }
 
+  /** The kernel's `(id, out)` rows by id: interpreted, then codegen'd. */
+  private def bothModes(input: DataFrame, kernel: Expression): (Seq[Row], Seq[Row]) = {
+    val name = kernel.prettyName
+    def run(df: DataFrame): (Seq[Row], String) = {
+      val q = df.select(col("id"), GraftColumnBridge.column(kernel).as("out"))
+      (q.collect().sortBy(_.getLong(0)).toSeq, q.queryExecution.executedPlan.toString)
+    }
+    val (interpreted, localPlan) = run(input)
+    val (codegen, shuffledPlan) = withConf(
+        "spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+      run(input.repartition(2))
+    }
+    // the optimizer evaluated the kernel while folding the local relation
+    assert(!localPlan.contains(name), localPlan)
+    // `*(n)`: the kernel's projection ran fused into WholeStageCodegen
+    assert(shuffledPlan.linesIterator.exists(l => l.contains(name) && l.contains("*(")),
+      shuffledPlan)
+    (interpreted, codegen)
+  }
+
   for ((label, input, kernel) <- kernels)
     test(s"$label: interpreted eval ≡ whole-stage codegen") {
-      val name = kernel.prettyName
-      def run(df: DataFrame): (Seq[Row], String) = {
-        val q = df.select(col("id"), GraftColumnBridge.column(kernel).as("out"))
-        (q.collect().sortBy(_.getLong(0)).toSeq, q.queryExecution.executedPlan.toString)
-      }
-      val (interpreted, localPlan) = run(input)
-      val (codegen, shuffledPlan) = withConf(
-          "spark.sql.codegen.fallback" -> "false",
-          "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
-        run(input.repartition(2))
-      }
-      // the optimizer evaluated the kernel while folding the local relation
-      assert(!localPlan.contains(name), localPlan)
-      // `*(n)`: the kernel's projection ran fused into WholeStageCodegen
-      assert(shuffledPlan.linesIterator.exists(l => l.contains(name) && l.contains("*(")),
-        shuffledPlan)
+      val (interpreted, codegen) = bothModes(input, kernel)
       assert(interpreted.exists(!_.isNullAt(1)), "every output null: the pin shows nothing")
       assert(interpreted === codegen)
     }
+
+  test("dot_weights: a null bucket gives null in both modes, not weights(0)") {
+    val expected = Seq(null, 0L, 114L + (1L << 40), 3 * (1L << 40), null)
+    val (interpreted, codegen) = bothModes(buckets, DotWeights(x("x"), weights))
+    assert(interpreted.map(_.get(1)) === expected)
+    assert(codegen.map(_.get(1)) === expected)
+  }
 }

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dev smoke for the SparkSessionExtensions surface: a FRESH JVM (sbt
   * runMain forks) builds its session with
@@ -11,10 +10,9 @@ import org.apache.spark.sql.SparkSession
   */
 object ExtensionsSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = graft.Session.builder(4)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val row = spark.sql(
       """SELECT

@@ -2,15 +2,13 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for named queries to files — the plan
   * evidence the optimization rounds commit under `plans/r<N>/`.
   *
   * Usage: Test/runMain graft.tools.PlanDump <outDir> <suffix> <name> [<name>…]
   * writes `<outDir>/<shortName>_<suffix>.txt` per query (short name = the
-  * id prefix, e.g. `h122`). Session conf mirrors Bench (local[32],
-  * shuffle.partitions=32, UTC) so plan shapes match what Bench executes;
+  * id prefix, e.g. `h122`). The session is Bench's ([[graft.Session]],
+  * `$SPARK_GRAFT_CPUS` cores) so plan shapes match what Bench executes;
   * sfDir from $SPARK_GRAFT_SF_DIR (default sf0.1).
   */
 object PlanDump {
@@ -20,13 +18,7 @@ object PlanDump {
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cores)
     if (sys.env.get("SPARK_GRAFT_MATERIALIZE").contains("1"))
       graft.queries.DupGraph.enableMaterialization()
     names.foreach { n =>

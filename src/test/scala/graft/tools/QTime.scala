@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev timing harness: Bench-style best-of-N timings for a handful of named
-  * queries without paying the full 151-query run. Mirrors Bench's session
-  * conf and noop-sink materialization so numbers are comparable to
-  * BENCH_r{N}.json / BASELINE.md medians.
+  * queries without paying the full 179-query run. Uses Bench's session
+  * ([[graft.Session]], `$SPARK_GRAFT_CPUS` cores) and noop-sink
+  * materialization so numbers are comparable to BENCH_r{N}.json /
+  * BASELINE.md medians.
   *
   * Usage: Test/runMain graft.tools.QTime <sfDir> <samples> <name> [<name>…]
   */
@@ -14,16 +13,7 @@ object QTime {
     val sfDir = args(0)
     val samples = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // mirrors Bench's round-21 scan-split floor (see Bench.scala)
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (512 * 1024).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cores)
     spark.read.parquet(s"$sfDir/region.parquet").selectExpr("count(*)").collect()
     spark.range(100000).selectExpr("sum(id % 7)").collect()
     // SPARK_GRAFT_MATERIALIZE=1 → mirror Bench's shared pair-graph opt-in

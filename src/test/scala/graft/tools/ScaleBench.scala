@@ -1224,13 +1224,7 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cores)
     val NxMatBkt = """(\d+)xmatbkt""".r
     val NxMat = """(\d+)xmat""".r
     val Nx = """(\d+)x""".r
@@ -1256,21 +1250,6 @@ object ScaleBench {
     val MjpegNx = """mjpeg(\d+)x""".r
     val AudioNx = """audio(\d+)x""".r
     args.lift(1) match {
-      case Some(m) if m.startsWith("time:") =>
-        // ad-hoc single-query timing (`… ScaleBench <sfDir> time:h116,h117`):
-        // best-of-2 per named registry query at sfDir, for plan iteration
-        // without a full Bench sweep
-        def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-        for (n <- m.stripPrefix("time:").split(',').toSeq) {
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            graft.SparkEntry.queries(n)(spark, sfDir)
-              .write.mode("overwrite").format("noop").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(s"[time] $n best2=${f3(math.min(once(), once()))}s")
-        }
-        spark.stop(); return
       case Some(VideoNx(n)) =>
         runVideoNx(spark, sfDir, copies(n)); spark.stop(); return
       case Some(MjpegNx(n)) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: executed shuffle volume (exchanges / records / bytes — the
   * [[graft.plans.ShuffleMetrics]] write-side totals) for named queries at a
   * scale dir, fresh-built per query like Round11Spec's measurement protocol.
@@ -13,13 +11,7 @@ object VolumeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cores)
     names.foreach { n =>
       graft.queries.DupGraph.reset()
       val vol = graft.plans.ShuffleMetrics.measure(
