@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -83,8 +83,8 @@ object Curate {
   }
 
   /** R1 + K2 (reference `data_processing.py:187-196, 399-435`): validate
-    * partition columns (raises like `:416-419`), then a static full-prefix
-    * overwrite (≙ Dask `overwrite=True`, SURVEY §7.4.5).
+    * partition columns (raises like `:416-419`), then write through the one
+    * zone writer, `Lakehouse.zoneWriter` (overwrite, zstd parquet).
     *
     * A partitioned write is hash-shuffled on its partition columns into
     * `defaultParallelism` partitions, so each partition directory is written
@@ -97,10 +97,11 @@ object Curate {
     val missing = partitionCols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"partition columns missing from dataframe: $missing")
     val writer =
-      if (partitionCols.isEmpty) df.coalesce(1).write
-      else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-        partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
-    writer.mode(SaveMode.Overwrite).parquet(path)
+      if (partitionCols.isEmpty) Lakehouse.zoneWriter(df.coalesce(1))
+      else Lakehouse.zoneWriter(df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, partitionCols.map(col): _*))
+        .partitionBy(partitionCols: _*)
+    writer.parquet(path)
   }
 
   /** Raw→curated flows (reference `flows.py:52-82, 220-249, 251-280`). */

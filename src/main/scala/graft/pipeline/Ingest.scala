@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ingestion: CSV → raw-zone Parquet (reference flows §3.2; SURVEY §2.1
@@ -43,18 +43,20 @@ object Ingest {
       .withColumn("transaction_date", date_format(parsed, "yyyy-MM-dd"))
   }
 
-  /** K1 — raw-zone sink (reference `data_processing.py:201-223`): static
-    * full-prefix overwrite (≙ Dask `overwrite=True`, SURVEY §7.4.5),
+  /** K1 — raw-zone sink (reference `data_processing.py:201-223`) through
+    * the one zone writer, `Lakehouse.zoneWriter` (overwrite, zstd parquet),
     * hive-partitioned on `transaction_date` so every downstream date
     * predicate prunes at the file listing — the property that matters most
     * at 100 TB.
     */
   def writeRawTransactions(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy("transaction_date").parquet(path)
+    Lakehouse.zoneWriter(df).partitionBy("transaction_date").parquet(path)
 
-  /** Unpartitioned raw sink for the dims (reference `flows.py:199-205`). */
+  /** Unpartitioned raw sink for the dims (reference `flows.py:199-205`)
+    * through `Lakehouse.zoneWriter`.
+    */
   def writeRawDim(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+    Lakehouse.zoneWriter(df).parquet(path)
 
   /** One-call ingestion flows (reference `flows.py:28-50, 86-150, 152-215`). */
   def ingestTransactions(spark: SparkSession, csv: String, raw: String): Unit =

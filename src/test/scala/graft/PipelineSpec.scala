@@ -1,12 +1,21 @@
 package graft
 
-import java.nio.file.Paths
+import java.io.File
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import graft.pipeline._
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
@@ -14,10 +23,14 @@ import org.scalatest.time.SpanSugar._
   * (with malformed timestamps and null segments per FIXTURES.md §2), run the
   * 6-stage master flow, and assert the curated star-schema invariants.
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
-  private val work = "/root/repo/target/e2e"
+  // per-run, so concurrent checkouts and runs never share a work dir
+  private lazy val work = Files.createTempDirectory("graft-e2e").toString
+
+  override def afterAll(): Unit = FileUtil.fullyDelete(new File(work))
+
   private val nTxn = 10000L
   private val nCust = 1000L
   private val nProd = 100L
@@ -92,6 +105,25 @@ class PipelineSpec extends SparkSpec {
     assert(dates.length > 1)
     for (d <- dates)
       assert(d.listFiles().count(_.getName.startsWith("part-")) === 1, d)
+  }
+
+  test("every zone table's data files are zstd in every column chunk") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val tables = Seq(zones.rawTransactions, zones.rawCustomers, zones.rawProducts,
+      zones.curatedFact, zones.curatedCustomerDim, zones.curatedProductDim)
+    for (table <- tables) {
+      val files = Using.resource(Files.walk(Paths.get(table)))(_.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toList)
+      assert(files.nonEmpty, table)
+      for (f <- files) {
+        val codecs = Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(
+          new Path(f.toUri), hc)))(_.getFooter.getBlocks.asScala
+          .flatMap(_.getColumns.asScala.map(_.getCodec)).toSet)
+        assert(codecs === Set(CompressionCodecName.ZSTD), f)
+      }
+    }
+    // the codec is per write: the session's own parquet writes keep Spark's default
+    assert(spark.conf.get("spark.sql.parquet.compression.codec") === "snappy")
   }
 
   test("curated fact write runs in more than one task") {
@@ -207,7 +239,7 @@ class PipelineSpec extends SparkSpec {
     val fileRun = zones // force the file:// run first (also writes the CSVs)
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.mockfs.impl", classOf[graft.tools.MockObjectStoreFS].getName)
-    val local = java.nio.file.Files.createTempDirectory("graft-mockfs").toString
+    val local = Files.createDirectories(Paths.get(work, "mockfs")).toString
     val z = Lakehouse.masterFlow(spark,
       s"$work/csv/transactions", s"$work/csv/customers", s"$work/csv/products",
       s"mockfs://lake$local/acme")

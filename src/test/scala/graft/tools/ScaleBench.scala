@@ -37,12 +37,13 @@ import org.apache.spark.sql.functions._
   * rebuild-cadence crossover evidence), `skewband<N>x` (budgetFill's
   * two-level scan under a degenerate all-equal score distribution:
   * balanced vs one-band-degenerate vs tie-split, timed at 1× and N×);
-  * no mode = the 10× suite.
+  * no mode = the 10× suite. Blow-ups are written under `target/` of the
+  * working directory.
   */
 object ScaleBench {
 
-  private val scaleDir = "/root/repo/target/scale10"
-  private def scaleNDir(copies: Int) = s"/root/repo/target/scale$copies"
+  private val scaleDir = "target/scale10"
+  private def scaleNDir(copies: Int) = s"target/scale$copies"
 
   // executed-plan shuffle walk — promoted to main (round 11) so Round11Spec
   // can pin record ceilings against the same measurement ScaleBench reports
@@ -427,7 +428,7 @@ object ScaleBench {
   private def runSkewBandNx(spark: SparkSession, sfDir: String,
       copies: Int): Unit = {
     import graft.extensions.{Splits, TextOps}
-    val dir = s"/root/repo/target/scaleskewband$copies"
+    val dir = s"target/scaleskewband$copies"
     if (!new java.io.File(s"$dir/documents.parquet").exists())
       buildDocsNx(spark, sfDir, dir, copies)
     spark.read.parquet(s"$dir/documents.parquet").selectExpr("count(*)").collect()
@@ -496,7 +497,7 @@ object ScaleBench {
     * times so the stage populations document the shape.
     */
   private def runPipeNx(spark: SparkSession, sfDir: String, copies: Int): Unit = {
-    val dir = s"/root/repo/target/scalepipe$copies"
+    val dir = s"target/scalepipe$copies"
     if (!new java.io.File(s"$dir/documents.parquet").exists()) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       (0 until copies).map { k =>
@@ -527,7 +528,7 @@ object ScaleBench {
   }
 
   private def runTailNx(spark: SparkSession, sfDir: String, copies: Int): Unit = {
-    val dir = s"/root/repo/target/scaletail$copies"
+    val dir = s"target/scaletail$copies"
     def blow(table: String, shifts: Map[String, Long]): Unit = {
       val base = spark.read.parquet(s"$sfDir/$table.parquet")
       val out = (0 until copies).map { k =>
@@ -1168,8 +1169,8 @@ object ScaleBench {
         .repartition(32).write.mode("overwrite").parquet(out)
     }
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val base = s"/root/repo/target/scale${label}_${sfTag}_1/media.parquet"
-    val big = s"/root/repo/target/scale${label}_${sfTag}_$copies/media.parquet"
+    val base = s"target/scale${label}_${sfTag}_1/media.parquet"
+    val big = s"target/scale${label}_${sfTag}_$copies/media.parquet"
     build(1, base); build(copies, big)
     def stats(path: String): (Long, Long) = {
       val r = spark.read.parquet(path)
